@@ -45,9 +45,9 @@ PROFILES = {
     },
     "serve": {
         "vocab": 6000, "zipf_s": 1.05, "len_median": 110, "len_sigma": 0.6,
-        "len_min": 20, "len_max": 400, "base_docs": 1000, "deltas": 2,
-        "delta_docs": 50, "tombstones": 30, "pool": 200, "query_zipf_s": 1.1,
-        "requests": 2400, "batch": 16,
+        "len_min": 20, "len_max": 400, "base_docs": 1000, "deliveries": 8,
+        "delivery_docs": 60, "replace_share": 0.1, "takedown_share": 0.05,
+        "junk": 2, "resends": 2, "pool": 200, "query_zipf_s": 1.1, "batch": 16,
     },
     "ingest": {
         "vocab": 6000, "zipf_s": 1.05, "len_median": 110, "len_sigma": 0.5,
@@ -57,10 +57,12 @@ PROFILES = {
     },
 }
 
-# The serve request mix, one entry per request in a fixed repeating cycle
-# (Serve.cycle) so every run holds the same share of each kind: per-call
-# requests are the majority (p50 is a per-call latency), batches and
-# hybrids set the tail.
+# The serve operation log repeats this cycle (Serve.cycle): one delivery
+# into the live stores, then one request of each read kind. The equal
+# shares are an assumption: no observed request mix exists for this
+# engine, and the sessions of the cited top-k work are not broken down by
+# request kind. Equal shares keep every kind in every run.
+SERVE_CYCLE = ["delivery", "bm25_one", "bm25_batch", "hybrid_batch"]
 # Recall@10 the IVF-PQ serve (8 cells, nProbe 3, 8x16 residual PQ) must
 # reach against exact cosine top-10 when the queries are documents' own
 # vectors. Measured 0.79-0.84; the floor catches broken probing or
@@ -70,8 +72,6 @@ ANN_RECALL_FLOOR = 0.5
 # engages), rare and mid-df terms, and absent terms (df = 0).
 QUERY_CLASSES = [("stop", "rare", "mid"), ("rare", "mid"),
                  ("stop", "rare", "mid", "absent"), ("rare", "mid", "absent")]
-SERVE_CYCLE = ["bm25_one", "bm25_one", "bm25_one", "bm25_batch",
-               "bm25_one", "bm25_one", "bm25_one", "hybrid_batch"]
 
 
 def make_vocab(rng, n):
@@ -341,25 +341,14 @@ def gen_serve(seed, out):
     p = PROFILES["serve"]
     rng = random.Random(seed)
     tx = Texts(rng, p)
-    next_id = 1
-    batches = []
-    for b in range(1 + p["deltas"]):
-        n = p["base_docs"] if b == 0 else p["delta_docs"]
-        rows = []
-        for _ in range(n):
-            rows.append({"doc_id": next_id, "text": " ".join(tx.words())})
-            next_id += 1
-        batches.append(rows)
-        write_jsonl(os.path.join(out, "base.jsonl" if b == 0 else f"delta{b}.jsonl"), rows)
-    all_ids = [r["doc_id"] for rows in batches for r in rows]
-    tomb = sorted(rng.sample(all_ids, p["tombstones"]))
-    write_jsonl(os.path.join(out, "tombstones.jsonl"), [{"doc_id": i} for i in tomb])
+    base = [{"doc_id": i, "text": " ".join(tx.words())} for i in range(1, p["base_docs"] + 1)]
+    write_jsonl(os.path.join(out, "base.jsonl"), base)
+    deliveries = gen_deliveries(rng, tx, p, out, base)
 
     df = {}
-    for rows in batches:
-        for r in rows:
-            for w in set(r["text"].split()):
-                df[w] = df.get(w, 0) + 1
+    for r in base:
+        for w in set(r["text"].split()):
+            df[w] = df.get(w, 0) + 1
     # Narrow df bands, so a class's queries cost about the same on every
     # seed and the per-run sample of queries does not decide the latency.
     present = sorted(w for w in df if w not in STOPWORDS)
@@ -367,10 +356,9 @@ def gen_serve(seed, out):
     mid = [w for w in present if 60 <= df[w] <= 120]
     hot = ["the", "of", "and"]
     absent = ["zx" + w for w in tx.vocab[len(STOPWORDS):len(STOPWORDS) + 200]]
-    # Equal query shares per term class. Every per-call request of a cycle
-    # takes its query from a different class, so each cycle holds the same
-    # class mix; within a class, and across the pool for batches, queries
-    # are drawn Zipf-skewed, so hot queries repeat.
+    # Equal query shares per term class. The per-call request of cycle c
+    # takes its query from class c mod 4; within a class, and across the
+    # pool for batches, queries are drawn Zipf-skewed, so hot queries repeat.
     pool, by_class = [], []
     for cls in QUERY_CLASSES:
         ids = []
@@ -383,47 +371,47 @@ def gen_serve(seed, out):
         by_class.append(ids)
     write_jsonl(os.path.join(out, "queries.jsonl"), pool)
 
+    # Delivery 0 lands in the warm-up; the log's cycles take the rest.
     zipf_pool = Zipf(len(pool), p["query_zipf_s"])
     zipf_class = Zipf(len(by_class[0]), p["query_zipf_s"])
     order = list(range(len(pool)))
     rng.shuffle(order)
     reqs = []
-    for r in range(p["requests"]):
-        kind = SERVE_CYCLE[r % len(SERVE_CYCLE)]
-        if kind == "bm25_one":
-            slot = SERVE_CYCLE[:r % len(SERVE_CYCLE)].count("bm25_one")
-            cls = by_class[slot % len(by_class)]
-            qids = [cls[zipf_class.draw(rng, 1)[0]]]
+    for r in range(len(SERVE_CYCLE) * (p["deliveries"] - 1)):
+        c, kind = divmod(r, len(SERVE_CYCLE))
+        kind = SERVE_CYCLE[kind]
+        row = {"req": r, "kind": kind, "qids": [], "delivery": None}
+        if kind == "delivery":
+            row["delivery"] = c + 1
+        elif kind == "bm25_one":
+            cls = by_class[c % len(by_class)]
+            row["qids"] = [cls[zipf_class.draw(rng, 1)[0]]]
         else:
-            qids = [order[i] for i in zipf_pool.draw(rng, p["batch"])]
-        reqs.append({"req": r, "kind": kind, "qids": qids})
+            row["qids"] = [order[i] for i in zipf_pool.draw(rng, p["batch"])]
+        reqs.append(row)
     write_jsonl(os.path.join(out, "requests.jsonl"), reqs)
 
-    write_json(os.path.join(out, "truth.json"), {"ann_recall_floor": ANN_RECALL_FLOOR})
+    write_json(os.path.join(out, "truth.json"), {"ann_recall_floor": ANN_RECALL_FLOOR,
+                                                 "base_docs": len(base), "deliveries": deliveries})
 
 
-# --------------------------------------------------------------- ingest
+# ----------------------------------------------------------- deliveries
 
-def gen_ingest(seed, out):
-    p = PROFILES["ingest"]
-    rng = random.Random(seed)
-    tx = Texts(rng, p)
-    next_id = 1
-    live = {}  # id -> text
-    base = []
-    for _ in range(p["base_docs"]):
-        t = " ".join(tx.gated_words(passes_stream_gate))
-        base.append({"doc_id": next_id, "text": t})
-        live[next_id] = t
-        next_id += 1
-    write_jsonl(os.path.join(out, "base.jsonl"), base)
-
+def gen_deliveries(rng, tx, p, out, base):
+    """Writes `deliveries/NNNN.jsonl` and `NNNN.takedowns.jsonl` on top of
+    the `base` documents and returns each delivery's ground truth. A
+    delivery holds new documents, re-delivered documents with changed text
+    (new ids; the old ids go on its takedown list), junk the streaming gate
+    drops and re-sends of earlier streamed text its exact dedup drops; it
+    also takes down a share of other live documents."""
+    next_id = max(r["doc_id"] for r in base) + 1
+    live = {r["doc_id"]: r["text"] for r in base}
     streamed = []  # texts admitted by earlier deliveries (resend sources)
     deliveries = []
     d_dir = os.path.join(out, "deliveries")
     os.makedirs(d_dir, exist_ok=True)
     for d in range(p["deliveries"]):
-        ts = f"2026-01-01 00:{d // 60:02d}:{d % 60:02d}"
+        ts = f"2026-01-01T00:{d // 60:02d}:{d % 60:02d}"
         n = p["delivery_docs"]
         n_rep = int(n * p["replace_share"])
         n_down = int(n * p["takedown_share"])
@@ -465,6 +453,19 @@ def gen_ingest(seed, out):
             "live_docs": len(live),
             "live_text_bytes": sum(len(t.encode("utf-8")) for t in live.values()),
         })
+    return deliveries
+
+
+# --------------------------------------------------------------- ingest
+
+def gen_ingest(seed, out):
+    p = PROFILES["ingest"]
+    rng = random.Random(seed)
+    tx = Texts(rng, p)
+    base = [{"doc_id": i, "text": " ".join(tx.gated_words(passes_stream_gate))}
+            for i in range(1, p["base_docs"] + 1)]
+    write_jsonl(os.path.join(out, "base.jsonl"), base)
+    deliveries = gen_deliveries(rng, tx, p, out, base)
     write_json(os.path.join(out, "truth.json"), {"base_docs": len(base), "deliveries": deliveries})
 
 

@@ -71,6 +71,15 @@ def check_corpus_pass(obs, truth):
     return bad
 
 
+def check_live_counts(obs, truth):
+    """Each store's live document count against the ground truth after the
+    deliveries landed so far."""
+    k = obs["delivered"]
+    want = truth["deliveries"][k - 1]["live_docs"]
+    return [f"{store} = {n}, ground truth {want} after {k} deliveries"
+            for store, n in sorted(obs["store"].items()) if n != want]
+
+
 def check_serve(obs, truth):
     """Named failures of the serve checks, one entry per failed sample."""
     bad = []
@@ -80,17 +89,14 @@ def check_serve(obs, truth):
             bad.append(f"request {r['req']} ({r['kind']}, terms {r['terms']}) differs from {ref}")
     if obs["ann_recall"] < truth["ann_recall_floor"]:
         bad.append(f"ANN recall@10 {obs['ann_recall']:.3f} below floor {truth['ann_recall_floor']}")
-    return bad
+    return bad + check_live_counts(obs, truth)
 
 
 def check_ingest(obs, truth):
     """Named failures of the ingest end-state checks."""
-    bad = []
-    k = obs["delivered"]
-    want = truth["deliveries"][k - 1]["live_docs"]
-    for store, n in sorted(obs["store"].items()):
-        if n != want:
-            bad.append(f"{store} = {n}, ground truth {want} after {k} deliveries")
+    bad = check_live_counts(obs, truth)
+    want = truth["deliveries"][obs["delivered"] - 1]["live_docs"]
+    for store in sorted(obs["store"]):
         if obs["oneshot"][store] != want:
             bad.append(f"one-shot {store} = {obs['oneshot'][store]}, ground truth {want}")
     for kind in ("bm25", "dedup", "ann"):
@@ -119,7 +125,7 @@ def verdict(workload, raw, truth):
         if "error" in obs:
             bad, checks = [f"checks: {obs['error']}"], 1
         elif workload == "serve":
-            bad, checks = check_serve(obs, truth), len(obs["results"]) + 1
+            bad, checks = check_serve(obs, truth), len(obs["results"]) + 4
         else:
             bad, checks = check_ingest(obs, truth), 9
         attempted += checks
@@ -137,44 +143,68 @@ def items_per_s(ops):
     return sum(o["items"] for o in ops) / max(sum(o["ms"] for o in ops), 1e-9) * 1000.0
 
 
+def kind_p50s(ops):
+    """Nearest-rank median latency of each operation kind."""
+    by = {}
+    for o in ops:
+        by.setdefault(o["kind"], []).append(o["ms"])
+    return {k: percentile(v, 50.0) for k, v in sorted(by.items())}
+
+
 def end_to_end(workload, raw, truth, attempted, failed):
     """The generic metrics BENCHMARK.json names, plus the
-    workload-specific names of the full report."""
+    workload-specific names of the full report. `memory_mb` is the
+    program's memory: peak native memory (peak RSS minus the pre-touched
+    fixed heap) plus the heap still in use after a full collection at the
+    end of the warm-up or of the loop, whichever is larger. `op_p50_ms` is the
+    geometric mean over operation kinds of each kind's median latency, so
+    every kind of a mixed workload moves it by the same share."""
     ops = [o for o in raw["ops"] if not o["error"]] or raw["ops"]
     ms = [o["ms"] for o in ops]
     rate = items_per_s(ops)
-    t_val, t_p, t_beyond = tail(ms)
+    p50s = kind_p50s(ops)
     m = {
         "setup_s": (statistics.median(raw["setup_s"]), "s"),
-        "peak_rss_mb": (raw["peak_rss_mb"], "MB"),
+        "memory_mb": (raw["peak_rss_mb"] - raw["heap_mb"] + raw["live_heap_mb"], "MB"),
         "items_per_s": (rate, "1/s"),
-        "op_p50_ms": (percentile(ms, 50.0), "ms"),
+        "op_p50_ms": (statistics.geometric_mean(p50s.values()), "ms"),
     }
+    # the tail over a workload's requests (serve: its reads) or deliveries
+    reads = [o["ms"] for o in ops if o["kind"] != "delivery"] if workload == "serve" else ms
+    t_val, t_p, t_beyond = tail(reads)
     extra = {
         "op_tail_ms": (t_val, "ms"),
+        "peak_rss_mb": (raw["peak_rss_mb"], "MB"),
+        "native_peak_mb": (raw["peak_rss_mb"] - raw["heap_mb"], "MB"),
+        "live_heap_mb": (raw["live_heap_mb"], "MB"),
         "failed_share": (failed / attempted, "ratio"),
         "ops_attempted": (attempted, "count"),
         "op_tail_percentile": (t_p, "percentile"),
         "op_tail_samples_beyond": (t_beyond, "count"),
         "session_start_s": (raw["session_start_s"], "s"),
+        "prepare_s": (raw["prepare_s"], "s"),
+        "setup_max_s": (max(raw["setup_s"]), "s"),
+        "loop_s": (raw["loop_s"], "s"),
         "warmup_s": (raw["warmup_s"], "s"),
         "checks_s": (raw["checks_s"], "s"),
     }
+    for k, v in p50s.items():
+        extra[f"p50_ms.{k}"] = (v, "ms")
     name = {"corpus": "corpus_docs_per_s", "serve": "serve_queries_per_s",
             "ingest": "ingest_docs_per_s"}[workload]
     extra[name] = (rate, ITEM_UNIT[workload])
     if workload == "serve":
-        extra["serve_p50_ms"] = m["op_p50_ms"]
+        extra["serve_p50_ms"] = (percentile(reads, 50.0), "ms")
         extra["serve_tail_ms"] = extra["op_tail_ms"]
         if "ann_recall" in raw["obs"]:
             extra["ann_recall_at_10"] = (raw["obs"]["ann_recall"], "ratio")
     if workload == "ingest":
-        extra["ingest_delivery_p50_ms"] = m["op_p50_ms"]
+        extra["ingest_delivery_p50_ms"] = (percentile(ms, 50.0), "ms")
         extra["ingest_delivery_tail_ms"] = extra["op_tail_ms"]
-        obs = raw["obs"]
-        if "store_bytes" in obs:
-            live_bytes = truth["deliveries"][obs["delivered"] - 1]["live_text_bytes"]
-            extra["store_bytes_per_input_byte"] = (obs["store_bytes"] / live_bytes, "ratio")
+    obs = raw["obs"]
+    if "store_bytes" in obs:
+        live_bytes = truth["deliveries"][obs["delivered"] - 1]["live_text_bytes"]
+        extra["store_bytes_per_input_byte"] = (obs["store_bytes"] / live_bytes, "ratio")
     return m, extra
 
 
@@ -245,12 +275,13 @@ def self_times(spans):
             for s in spans}
 
 
-def per_layer(workload, raw, truth, spans, jobs, untraced_rate=None):
+def per_layer(workload, raw, truth, spans, jobs):
     """Per-layer metrics over the traced operations, each per operation
     (per request of that kind for `similarity.*`), counts and ratios as
     measured. A layer that does not run in the workload reads 0.
-    `trace.overhead_share` compares this run's throughput with
-    `untraced_rate`, an untraced run's items per second (0 without one)."""
+    `trace.overhead_share` is the time the tracer itself spent in the loop
+    (counter reads, listener-bus drains, span records) over the loop's
+    time without it."""
     traced = [o for o in raw["ops"] if o["traced"] and not o["error"]]
     n = max(len(traced), 1)
     ids = {o["i"] for o in traced}
@@ -295,13 +326,12 @@ def per_layer(workload, raw, truth, spans, jobs, untraced_rate=None):
     for st in STORES:
         for act in ("append", "delete", "compact"):
             m[f"store.{st}.{act}_ms"] = total(f"store.{st}.{act}") / n
-    if workload == "ingest":
-        obs = raw["obs"]
-        for st in STORES:
-            m[f"store.{st}.files"] = obs.get("store_files", {}).get(st, 0)
-        written = sum(s["c"].get("output_bytes", 0) for s in spans if s["name"].startswith("store."))
-        fed = sum(truth["deliveries"][o["i"] + 1]["text_bytes"] for o in traced)
-        m["store.write_amp"] = written / fed if fed else 0.0
+    for st in STORES:
+        m[f"store.{st}.files"] = raw["obs"].get("store_files", {}).get(st, 0)
+    written = sum(s["c"].get("output_bytes", 0) for s in spans if s["name"].startswith("store."))
+    fed = sum(truth["deliveries"][o["obs"]["delivery"]]["text_bytes"] for o in traced
+              if "delivery" in o["obs"])
+    m["store.write_amp"] = written / fed if fed else 0.0
     for s in STREAM:
         m[f"streaming.{s}"] = sum(o["c"].get(f"stream.{s}", 0) for o in ops) / n
     rows = [o["c"].get("stream.state_rows", 0) for o in ops]
@@ -310,6 +340,6 @@ def per_layer(workload, raw, truth, spans, jobs, untraced_rate=None):
         m[f"spark.{s}"] = sum(o["c"].get(s, 0) for o in ops) / n
     intervals = [(j["t0"], j["t1"]) for j in jobs]
     m["driver.idle_ms"] = sum(dur(o) - covered(o["t0"], o["t1"], intervals) for o in ops) / n
-    if untraced_rate:
-        m["trace.overhead_share"] = untraced_rate / items_per_s(traced) - 1.0
+    own_ms = raw["trace_own_ms"]
+    m["trace.overhead_share"] = own_ms / (raw["loop_s"] * 1000.0 - own_ms)
     return m

@@ -1,135 +1,37 @@
 package perfbench
 
-import java.io.File
-import java.nio.file.{Files, StandardCopyOption}
-
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types._
 
 import graft.dedup.DedupIndexStore
-import graft.embed.{Embedders, TransformerModel}
 import graft.similarity.{Bm25IndexStore, IndexStore}
-import graft.streaming.TextStream
 
-/** `ingest`: deliveries land as parquet files in a directory; each one
+/** `ingest`: deliveries land as JSON-lines files in a directory; each one
   * drains through the streaming curation gate and exact dedup into the
   * BM25, dedup and ANN stores, then its takedown list is tombstoned in all
-  * three. Every [[CompactEvery]]th delivery also compacts the three stores.
-  * One operation is one delivery, timed from the file landing to all three
-  * stores serving it. Delivery 0 lands during setup, as the warm-up. */
+  * three (see [[LiveStores]]). Every [[CompactEvery]]th delivery also
+  * compacts the three stores. One operation is one delivery, timed from the
+  * file landing to all three stores serving it. Delivery 0 lands in the
+  * warm-up. */
 final class Ingest(spark: SparkSession, in: String, work: String, t: Tracer) extends Workload {
   import spark.implicits._
 
   val CompactEvery = 2
-  private val Model = TransformerModel.FixtureModelId
-  private val docSchema = new StructType().add("doc_id", LongType).add("text", StringType)
-  private val rowSchema = docSchema.add("ts", TimestampType)
-  private val nDeliveries =
-    new File(s"$in/deliveries").list().count(f => f.matches("\\d+\\.jsonl"))
-  private val staged = s"$work/staged"
-
-  // The deliveries as single parquet files, written once before setup:
-  // input preparation, like generation, is outside the measured setup.
-  locally {
-    spark.read.schema(new StructType().add("doc_id", LongType).add("text", StringType)
-        .add("ts", StringType))
-      .json(s"$in/deliveries/[0-9][0-9][0-9][0-9].jsonl")
-      .withColumn("d", regexp_extract(input_file_name(), "(\\d+)\\.jsonl$", 1).cast("int"))
-      .withColumn("ts", to_timestamp(col("ts")))
-      .repartition(col("d"))
-      .write.mode("overwrite").partitionBy("d").parquet(staged)
-  }
-
-  private var dir = ""
-  private def bm25 = s"$dir/bm25"
-  private def dedup = s"$dir/dedup"
-  private def ann = s"$dir/ann"
-  private var delivered = 0
-
-  private def embedded(d: DataFrame): DataFrame =
-    Embedders.embed(d, "text", "embedding", Model).select(col("doc_id").as("vec_id"), col("embedding"))
-  private def takedowns(d: Int): DataFrame =
-    spark.read.schema(new StructType().add("doc_id", LongType))
-      .json(f"$in/deliveries/$d%04d.takedowns.jsonl")
+  private val stores = new LiveStores(spark, in, work, t)
+  import stores.{ann, bm25, dedup, embedded}
 
   def cycle: Int = CompactEvery
   def kind(i: Int): String = if ((i + 1) % CompactEvery == 0) "delivery_compact" else "delivery"
 
-  def setup(rep: Int): Unit = {
-    dir = s"$work/ingest-$rep"
-    val base = spark.read.schema(docSchema).json(s"$in/base.jsonl").persist()
-    Bm25IndexStore.writeBm25Index(base, bm25)
-    DedupIndexStore.writeDedupIndex(base, dedup)
-    val vecs = embedded(base).persist()
-    IndexStore.writeIvfPqIndex(vecs, ann)
-    vecs.unpersist(); base.unpersist()
-    new File(s"$dir/landing").mkdirs()
-  }
+  def setup(rep: Int): Unit = stores.build(s"$work/ingest-$rep")
 
-  def warmup(): Unit = deliver(0)
-
-  /** Moves delivery `d`'s file into the landing directory in one rename. */
-  private def land(d: Int): Long = {
-    val src = new File(s"$staged/d=$d").listFiles().filter(_.getName.endsWith(".parquet")).head
-    val tmp = new File(f"$dir/landing/.$d%04d.parquet")
-    Files.copy(src.toPath, tmp.toPath, StandardCopyOption.REPLACE_EXISTING)
-    Files.move(tmp.toPath, new File(f"$dir/landing/$d%04d.parquet").toPath, StandardCopyOption.ATOMIC_MOVE)
-    Files.lines(new File(f"$in/deliveries/$d%04d.jsonl").toPath).count()
-  }
-
-  /** The curated stream over the landing directory: gate, then stateful
-    * exact dedup. Each store's sink runs it under its own checkpoint. */
-  private def curated: DataFrame =
-    TextStream.streamingExactDedup(
-      TextStream.curationGate(spark.readStream.schema(rowSchema).parquet(s"$dir/landing"), "text"),
-      "text", "ts").select("doc_id", "text")
-
-  private def drain(q: StreamingQuery): Unit = {
-    q.awaitTermination()
-    q.exception.foreach(e => throw e)
-  }
-
-  private def deliver(d: Int): Long = {
-    val docs = land(d)
-    t.span("store.bm25.append") {
-      drain(Bm25IndexStore.streamAppendToBm25Index(curated, bm25, s"$dir/ckpt/bm25"))
-    }
-    t.span("store.dedup.append") {
-      drain(DedupIndexStore.streamAppendToDedupIndex(curated, dedup, s"$dir/ckpt/dedup"))
-    }
-    t.span("store.ann.append") {
-      drain(curated.writeStream
-        .option("checkpointLocation", s"$dir/ckpt/ann")
-        .foreachBatch { (batch: DataFrame, _: Long) => IndexStore.appendToIvfPqIndex(embedded(batch), ann) }
-        .trigger(Trigger.AvailableNow())
-        .start())
-    }
-    val down = takedowns(d).persist()
-    t.span("store.bm25.delete")(Bm25IndexStore.deleteFromBm25Index(down, bm25))
-    t.span("store.dedup.delete")(DedupIndexStore.deleteFromDedupIndex(down, dedup))
-    t.span("store.ann.delete")(IndexStore.deleteFromIndex(down.select(col("doc_id").as("vec_id")), ann))
-    down.unpersist()
-    if (d > 0 && d % CompactEvery == 0) {
-      t.span("store.bm25.compact")(Bm25IndexStore.compactBm25Index(spark, bm25))
-      t.span("store.dedup.compact")(DedupIndexStore.compactDedupIndex(spark, dedup))
-      t.span("store.ann.compact")(IndexStore.compactIvfIndex(spark, ann))
-    }
-    delivered = d + 1
-    docs
-  }
+  def warmup(): Unit = stores.deliver(0)
 
   def op(i: Int): OpResult = {
-    require(i + 1 < nDeliveries, s"only $nDeliveries deliveries generated")
-    OpResult(deliver(i + 1))
-  }
-
-  private def parquetFiles(root: String): Seq[File] = {
-    def walk(f: File): Seq[File] =
-      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk)
-      else if (f.getName.endsWith(".parquet")) Seq(f) else Seq.empty
-    walk(new File(root))
+    val d = i + 1
+    val docs = stores.deliver(d)
+    if (d % CompactEvery == 0) stores.compact()
+    OpResult(docs, Map("delivery" -> d))
   }
 
   /** Store state after the run, and the same figures from a one-shot build
@@ -137,25 +39,7 @@ final class Ingest(spark: SparkSession, in: String, work: String, t: Tracer) ext
     * the ground truth lists them). The one-shot ANN index reuses the live
     * index's centroids and codebooks, so served neighbours must match. */
   def observations(): Map[String, Any] = {
-    val truth = spark.read.option("multiLine", "true").json(s"$in/truth.json")
-      .select(posexplode(col("deliveries")).as(Seq("d", "x")))
-      .filter(col("d") < delivered)
-    val admitted = truth.select(explode(col("x.admitted")).as("doc_id"))
-    val downIds = truth.select(explode(col("x.takedowns")).as("doc_id"))
-    val rows = spark.read.parquet(staged).filter(col("d") < delivered).select("doc_id", "text")
-    val live = spark.read.schema(docSchema).json(s"$in/base.jsonl")
-      .union(rows.join(admitted, Seq("doc_id"), "left_semi"))
-      .join(downIds, Seq("doc_id"), "left_anti").persist()
-
-    def state(b: String, d: String, a: String): Map[String, Any] = {
-      val bd = Bm25IndexStore.describeBm25Index(spark, b).first()
-      val dd = DedupIndexStore.describeDedupIndex(spark, d).first()
-      val ad = IndexStore.describeIvfIndex(spark, a).agg(sum("n_codes"), sum("n_tombstoned")).first()
-      Map(
-        "bm25_live" -> (bd.getAs[Long]("n_docs") - bd.getAs[Long]("n_tombstones")),
-        "dedup_live" -> (dd.getAs[Long]("n_docs") - dd.getAs[Long]("n_tombstoned")),
-        "ann_live" -> (ad.getLong(0) - ad.getLong(1)))
-    }
+    val live = stores.live().persist()
     val one = s"$work/oneshot"
     Bm25IndexStore.writeBm25Index(live, s"$one/bm25")
     DedupIndexStore.writeDedupIndex(live, s"$one/dedup")
@@ -179,16 +63,12 @@ final class Ingest(spark: SparkSession, in: String, work: String, t: Tracer) ext
         .collect().map(r => Seq(r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_.mkString(",")).toSeq
       Map("bm25" -> lex, "dedup" -> near, "ann" -> nn)
     }
-    def files(root: String) = parquetFiles(root)
-    val storeBytes = Seq(bm25, dedup, ann).flatMap(files).map(_.length).sum
     val out = Map(
-      "delivered" -> delivered,
-      "store" -> state(bm25, dedup, ann),
-      "oneshot" -> state(s"$one/bm25", s"$one/dedup", s"$one/ann"),
+      "delivered" -> stores.delivered,
+      "store" -> stores.liveCounts(),
+      "oneshot" -> stores.liveCounts(one),
       "store_serves" -> serves(bm25, dedup, ann),
-      "oneshot_serves" -> serves(s"$one/bm25", s"$one/dedup", s"$one/ann"),
-      "store_bytes" -> storeBytes,
-      "store_files" -> Map("bm25" -> files(bm25).size, "dedup" -> files(dedup).size, "ann" -> files(ann).size))
+      "oneshot_serves" -> serves(s"$one/bm25", s"$one/dedup", s"$one/ann")) ++ stores.footprint()
     live.unpersist()
     out
   }

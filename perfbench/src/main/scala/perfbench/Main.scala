@@ -27,25 +27,28 @@ trait Workload {
 }
 
 /** Runs one workload for a fixed time and writes the raw record:
-  * `--workload W --input DIR --work DIR --seconds S --trace 0|1 --out FILE`.
+  * `--workload W --input DIR --work DIR --seconds S --trace 0|1 --out FILE`,
+  * on `local[Cpus]` with `Cpus` shuffle partitions.
   * The record holds setup times, every operation's latency and result, the
   * observations, peak RSS and (traced) the span file. Metrics and checks
   * are derived from it by `run.py`. */
 object Main {
-  val SetupReps = 3
+  /** Setups per run; `setup_s` is their median. The first one also pays
+    * cold code generation, so the median of two is their mean. */
+  val SetupReps = 2
+  val Cpus = 4
 
   def main(args: Array[String]): Unit = {
     val o = args.grouped(2).collect { case Array(k, v) => k.stripPrefix("--") -> v }.toMap
     val work = o("work")
     val seconds = o("seconds").toDouble
     val trace = o("trace") == "1"
-    val cpus = o.getOrElse("cpus", "4")
 
     val t0 = System.nanoTime()
     val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+      .master(s"local[$Cpus]")
       .appName("perfbench")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", Cpus)
       .config("spark.ui.enabled", "false")
       .config("spark.local.dir", s"$work/spark-local")
       .config("spark.sql.warehouse.dir", s"$work/warehouse")
@@ -57,16 +60,19 @@ object Main {
     if (trace)
       graft.embed.EmbedderRegistry.register(model, new CountingEmbedder(graft.embed.TransformerModel.fixture()))
     val tracer = new Tracer(spark, trace)
+    val prepStart = System.nanoTime()
     val wl: Workload = o("workload") match {
       case "corpus" => new Corpus(spark, o("input"), work, tracer)
       case "serve" => new Serve(spark, o("input"), work, tracer)
       case "ingest" => new Ingest(spark, o("input"), work, tracer)
     }
+    val prepareS = (System.nanoTime() - prepStart) / 1e9
 
     val setupS = (0 until SetupReps).map { r =>
       val s = System.nanoTime(); wl.setup(r); (System.nanoTime() - s) / 1e9
     }
     val warmS = { val s = System.nanoTime(); wl.warmup(); (System.nanoTime() - s) / 1e9 }
+    val liveWarmMb = liveHeapMb()
 
     // Closed loop, one client, whole cycles, at least one.
     val ops = mutable.ArrayBuffer.empty[Map[String, Any]]
@@ -88,6 +94,7 @@ object Main {
     }
     val loopS = (System.nanoTime() - loopStart) / 1e9
     tracer.active = false
+    val liveLoopMb = liveHeapMb()
 
     val checksStart = System.nanoTime()
     val obs =
@@ -100,6 +107,7 @@ object Main {
     val record = Map(
       "workload" -> o("workload"),
       "session_start_s" -> sessionS,
+      "prepare_s" -> prepareS,
       "setup_s" -> setupS,
       "warmup_s" -> warmS,
       "loop_s" -> loopS,
@@ -107,10 +115,27 @@ object Main {
       "ops" -> ops,
       "obs" -> obs,
       "peak_rss_mb" -> peakRssMb(),
+      "heap_mb" -> heapMb,
+      "live_heap_mb" -> math.max(liveWarmMb, liveLoopMb),
+      "trace_own_ms" -> tracer.ownMs,
       "spans" -> (if (trace) spansPath else null))
     val w = new java.io.PrintWriter(o("out"), "UTF-8")
     try w.println(Json(record)) finally w.close()
     spark.stop()
+  }
+
+  private def heapMb: Double =
+    java.lang.management.ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getCommitted / 1048576.0
+
+  /** Heap in use after a full collection, in MB: what the program retains
+    * (caches, persisted blocks, plans). Called outside the timed loop. The
+    * second collection frees the broadcast and shuffle blocks Spark's
+    * context cleaner drops once the first one has cleared their owners. */
+  def liveHeapMb(): Double = {
+    System.gc()
+    Thread.sleep(500)
+    System.gc()
+    java.lang.management.ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed / 1048576.0
   }
 
   /** The process's peak resident set (VmHWM), in MB. */

@@ -118,6 +118,11 @@ final class Tracer(spark: SparkSession, enabled: Boolean) {
 
   def beginOp(i: Int): Unit = op = i
 
+  private var ownNanos = 0L
+  /** Time spent recording spans (counter reads, listener-bus drains and
+    * span records), the part of a traced run's time tracing adds. */
+  def ownMs: Double = ownNanos / 1e6
+
   private def counters(): Array[Double] = {
     org.apache.spark.perfbench.BusFlush(spark.sparkContext)
     sc.snapshot() ++ st.snapshot() ++
@@ -129,13 +134,16 @@ final class Tracer(spark: SparkSession, enabled: Boolean) {
   def span[T](name: String)(body: => T): T =
     if (!active) body
     else {
+      val s0 = System.nanoTime()
       val c0 = counters()
       val started = Open(nextId, nowMs(), c0, mutable.LinkedHashMap.empty)
+      ownNanos += System.nanoTime() - s0
       nextId += 1
       val parent = stack.headOption.map(_.id)
       stack = started :: stack
       try body
       finally {
+        val s1 = System.nanoTime()
         val t1 = nowMs()
         val c1 = counters()
         stack = stack.tail
@@ -145,6 +153,7 @@ final class Tracer(spark: SparkSession, enabled: Boolean) {
         }.toMap
         spans += Map("id" -> started.id, "parent" -> parent.getOrElse(-1), "name" -> name,
           "op" -> op, "t0" -> started.t0, "t1" -> t1, "c" -> delta, "a" -> started.attrs.toMap)
+        ownNanos += System.nanoTime() - s1
       }
     }
 

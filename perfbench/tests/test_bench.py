@@ -64,7 +64,8 @@ def corpus_raw_and_truth():
                     dict(copy.deepcopy(day), cache_misses=5, candidate_pairs=2)]}
     op = {"i": 0, "kind": "pass", "ms": 1000.0, "items": 20, "traced": False, "error": None, "obs": obs}
     raw = {"ops": [op, dict(copy.deepcopy(op), i=1)], "obs": {}, "setup_s": [1.0, 2.0, 3.0],
-           "peak_rss_mb": 100.0, "session_start_s": 1.0}
+           "peak_rss_mb": 2300.0, "heap_mb": 2048.0, "live_heap_mb": 100.0, "session_start_s": 1.0, "prepare_s": 0.1, "loop_s": 2.0,
+           "warmup_s": 1.0, "checks_s": 0.5}
     return raw, truth
 
 
@@ -95,15 +96,18 @@ class FailureCountTest(unittest.TestCase):
         self.assertEqual(report.verdict("corpus", raw, truth)[:2], (2, 1))
 
     def test_corrupted_serve_row_counts_as_failed(self):
-        row = {"req": 0, "kind": "bm25_one", "terms": ["the"], "got": [[1, 2.5]], "ref": [[1, 2.5]]}
-        raw = {"ops": [{"i": 0, "kind": "bm25_one", "error": None}],
-               "obs": {"results": [row, dict(row, req=5)], "ann_recall": 0.9}}
-        truth = {"ann_recall_floor": 0.5}
-        self.assertEqual(report.verdict("serve", raw, truth)[:2], (4, 0))
+        row = {"req": 1, "kind": "bm25_one", "terms": ["the"], "got": [[1, 2.5]], "ref": [[1, 2.5]]}
+        raw = {"ops": [{"i": 0, "kind": "delivery", "error": None}],
+               "obs": {"results": [row, dict(row, req=5)], "ann_recall": 0.9, "delivered": 2,
+                       "store": {"bm25_live": 5, "dedup_live": 5, "ann_live": 5}}}
+        truth = {"ann_recall_floor": 0.5, "deliveries": [{"live_docs": 4}, {"live_docs": 5}]}
+        self.assertEqual(report.verdict("serve", raw, truth)[:2], (7, 0))
         raw["obs"]["results"][1]["got"] = [[1, 2.4]]
-        self.assertEqual(report.verdict("serve", raw, truth)[:2], (4, 1))
+        self.assertEqual(report.verdict("serve", raw, truth)[:2], (7, 1))
         raw["obs"]["ann_recall"] = 0.2
-        self.assertEqual(report.verdict("serve", raw, truth)[:2], (4, 2))
+        self.assertEqual(report.verdict("serve", raw, truth)[:2], (7, 2))
+        raw["obs"]["store"]["dedup_live"] = 4
+        self.assertEqual(report.verdict("serve", raw, truth)[:2], (7, 3))
 
     def test_corrupted_ingest_state_counts_as_failed(self):
         serves = {"bm25": [[1, 1.0]], "dedup": [[9, 1, 1.0]], "ann": [[-1, 1, 1]]}
@@ -116,6 +120,17 @@ class FailureCountTest(unittest.TestCase):
         obs["store"]["ann_live"] = 6
         obs["store_serves"]["dedup"] = []
         self.assertEqual(report.verdict("ingest", raw, truth)[:2], (10, 2))
+
+
+class EndToEndTest(unittest.TestCase):
+    def test_op_p50_weighs_every_kind(self):
+        raw, truth = corpus_raw_and_truth()
+        kinds = [("a", 100.0), ("a", 120.0), ("b", 400.0), ("b", 400.0), ("b", 400.0)]
+        raw["ops"] = [dict(raw["ops"][0], i=i, kind=k, ms=ms) for i, (k, ms) in enumerate(kinds)]
+        m, extra = report.end_to_end("corpus", raw, truth, 5, 0)
+        self.assertAlmostEqual(m["op_p50_ms"][0], (100.0 * 400.0) ** 0.5)
+        self.assertEqual(m["memory_mb"][0], 2300.0 - 2048.0 + 100.0)
+        self.assertEqual(extra["p50_ms.b"][0], 400.0)
 
 
 class TailRuleTest(unittest.TestCase):
