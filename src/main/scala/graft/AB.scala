@@ -6,16 +6,23 @@ import org.apache.spark.sql.SparkSession
   * Runs the named queries with a system property flipped 0/1 on
   * ALTERNATING passes inside ONE JVM, so the box's ~1.6-4x same-day speed
   * band hits both arms equally; reports per-arm medians. Usage:
-  *   AB_PROP=graft.probe.signOnce AB_QUERIES=q_a,q_b AB_PASSES=6 \
+  *   AB_PROP=graft.bm25.scanOnce AB_QUERIES=q_a,q_b AB_PASSES=6 \
   *     sbt "runMain graft.AB"
   */
 object AB {
+  private val Usage =
+    "usage: AB_PROP=<system property> (or AB_CONF=<session conf>) " +
+      "[AB_VAL0=0 AB_VAL1=1 AB_QUERIES=q_a,q_b AB_PASSES=6] sbt \"runMain graft.AB\""
+
   def main(args: Array[String]): Unit = {
-    val prop = sys.env.getOrElse("AB_PROP", "graft.probe.signOnce")
     // AB_CONF set => arms flip a SESSION CONF instead of a system
     // property (diagnostic sizing only — e.g. how much of a family's
     // cost is AQE barriers; never a shipping change by itself)
     val confKey = sys.env.get("AB_CONF")
+    val prop = confKey.orElse(sys.env.get("AB_PROP")).getOrElse {
+      System.err.println(Usage)
+      sys.exit(2)
+    }
     val armVals = Array(
       sys.env.getOrElse("AB_VAL0", "0"), sys.env.getOrElse("AB_VAL1", "1"))
     val names = sys.env.getOrElse("AB_QUERIES", "q_dedup_index_probe")

@@ -15,21 +15,15 @@ import graft.text.{Bpe, Concordance, TextAnalysis, TextFunctions, Tokenize, Toke
   */
 object SparkEntry {
 
-  /** Table-schema memo (round 21, guide §1/§6): a schemaless parquet
-    * read runs a footer-inference JOB per call (~30 ms + a driver gap),
-    * and the 176 queries re-infer the same handful of table schemas on
-    * every invocation. A catalog/metastore holds exactly this metadata
-    * once; the memo models it per JVM — first read of a path infers,
-    * later reads supply the schema explicitly. DATA is re-read from
-    * parquet on every query invocation as before; only schema METADATA
-    * is reused (the same once-per-JVM posture as the store-format
-    * schemas in the index stores). Keyed on the full path, so multiple
-    * sf dirs in one JVM never cross. */
+  /** Table read through [[graft.util.ArtifactReader]]: the listing and
+    * the schema footer are read on the driver (a schemaless parquet read
+    * runs a footer-inference JOB per call, ~30 ms plus a driver gap, and
+    * the 176 queries re-read the same handful of tables), and the schema
+    * is memoized under the exact file listing, so a table regenerated at
+    * the same path in-process is re-read, never served a stale schema.
+    * DATA is re-read from parquet on every query invocation. */
   private def tbl(spark: SparkSession, dir: String, name: String): DataFrame =
-    // Round 22 (ADVICE r21): the memo key now carries a freshness token
-    // (file mtime+size), so a testdata parquet regenerated at the same
-    // path in-process re-infers instead of serving a stale schema.
-    graft.util.SchemaMemo.parquet(spark, s"$dir/$name.parquet")
+    graft.util.ArtifactReader.parquet(spark, s"$dir/$name.parquet")
 
   /** Event-time column normalized to TIMESTAMP, robust to the physical
     * parquet encoding of `events.ts` across testdata generations:
@@ -3606,8 +3600,7 @@ ORDER BY doc_id, token""")
 
     // ...and a BATCH of hybrid queries served in a CONSTANT number of
     // plans — the last per-query serving front end batch-amortized: ONE
-    // batched BM25 plan (postings scanned twice total, static bucket
-    // pruning) + ONE batched ANN plan (one codes read, dynamic cell
+    // batched BM25 plan (postings scanned once, static bucket pruning) + ONE batched ANN plan (one codes read, dynamic cell
     // pruning over the probe union) + one window-shaped fusion. Query 1
     // is exactly q_hybrid_served's query; every query's rows are
     // bitwise what per-call rrfServed returns for it (spec-pinned) —

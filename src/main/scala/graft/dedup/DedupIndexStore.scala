@@ -84,21 +84,17 @@ object DedupIndexStore {
         graft.util.ArtifactTree.resolve(spark, path, "bands"))
   }
 
-  /** The persisted signature config. Bounded driver action (one row). */
-  // fixed store-format meta schema: skips the footer-inference job per
-  // probe (round 21; see IndexStore's note)
-  private val MetaSchema = new org.apache.spark.sql.types.StructType()
-    .add("num_hashes", "int").add("shingle_size", "int")
-    .add("bands", "int").add("seed", "long")
-
-  def readMeta(spark: SparkSession, path: String): DedupIndexMeta = {
-    val rows = spark.read.schema(MetaSchema).parquet(s"$path/meta").collect()
-    require(rows.length == 1, s"DedupIndexStore: expected one meta row at $path, got ${rows.length}")
-    val r = rows(0)
-    DedupIndexMeta(
-      r.getAs[Int]("num_hashes"), r.getAs[Int]("shingle_size"),
-      r.getAs[Int]("bands"), r.getAs[Long]("seed"))
-  }
+  /** The persisted signature config: one row, read once per listing of
+    * `meta/` ([[graft.util.ArtifactReader.value]]). */
+  def readMeta(spark: SparkSession, path: String): DedupIndexMeta =
+    graft.util.ArtifactReader.value(spark, s"$path/meta", "meta") { df =>
+      val rows = df.collect()
+      require(rows.length == 1, s"DedupIndexStore: expected one meta row at $path, got ${rows.length}")
+      val r = rows(0)
+      DedupIndexMeta(
+        r.getAs[Int]("num_hashes"), r.getAs[Int]("shingle_size"),
+        r.getAs[Int]("bands"), r.getAs[Long]("seed"))
+    }
 
   /** Incremental maintenance: sign NEW documents under the PERSISTED
     * config (never the caller's — a config drift would silently break
@@ -233,16 +229,14 @@ object DedupIndexStore {
   }
 
   /** Flat + streaming-delta trees (same recursive-read posture as the
-    * ANN store's code table). */
-  // SchemaMemo (round 22): id-typed schema still comes from the
-  // artifact's own footers, inferred once per file state instead of
-  // once per probe — see graft.util.SchemaMemo's posture notes
+    * ANN store's code table); the id type comes from the artifact's own
+    * footer, read on the driver by [[graft.util.ArtifactReader]]. */
   def readSignatures(spark: SparkSession, path: String): DataFrame =
-    graft.util.SchemaMemo.parquet(spark,
+    graft.util.ArtifactReader.parquet(spark,
       graft.util.ArtifactTree.resolve(spark, path, "signatures"), recursive = true)
 
   def readBands(spark: SparkSession, path: String): DataFrame =
-    graft.util.SchemaMemo.parquet(spark,
+    graft.util.ArtifactReader.parquet(spark,
       graft.util.ArtifactTree.resolve(spark, path, "bands"), recursive = true)
 
   /** Index bookkeeping — the ops surface for the persisted dedup tier:

@@ -1,9 +1,10 @@
 package graft.similarity
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.text.Tokenize
+import graft.util.ArtifactReader
 
 /** Persist-and-serve contract for the lexical retrieval tier — the
   * third persisted index alongside the ANN store
@@ -56,7 +57,8 @@ import graft.text.Tokenize
   * exclude tombstoned docs before `df(t)` is counted, and `N`/`avgdl`
   * come from the `stats_net` cache the delete maintains (net of
   * tombstones, validated per query against the live tombstone count —
-  * a bounded job on the delta-class tombstone set; a stale cache from
+  * a driver-side count of the delta-class tombstone set, taken once per
+  * listing of it by [[graft.util.ArtifactReader]]; a stale cache from
   * a crashed delete fails the stamp and serving recomputes from
   * `doclens` exactly). Served results equal an index rebuilt without
   * the deleted documents in every state (spec- and oracle-pinned), and
@@ -139,7 +141,7 @@ object Bm25IndexStore {
       .select(col("doc_id"), size(col("toks")).cast("long").as("dl"),
         explode_outer(col("toks")).as("token"))
       .write.mode("overwrite").parquet(dump)
-    val exploded = spark.read.parquet(dump)
+    val exploded = ArtifactReader.parquet(spark, dump)
     val postings = exploded.filter(col("token").isNotNull)
       .groupBy(bucketCol(col("token"), nBuckets).as("tok_bucket"),
         col("token"), col("doc_id"), col("dl"))
@@ -172,9 +174,7 @@ object Bm25IndexStore {
     * any streaming-delta subtree (where `tok_bucket` is a data column —
     * schema-aligned union). */
   private def readPostings(spark: SparkSession, path: String): DataFrame = {
-    // SchemaMemo: doc_id's type still comes from the artifact footers,
-    // inferred once per file state (round 22)
-    val main = graft.util.SchemaMemo.parquet(spark,
+    val main = ArtifactReader.parquet(spark,
       graft.util.ArtifactTree.resolve(spark, path, "postings"))
     graft.util.ArtifactTree.readOptional(spark, path, "postings_deltas") match {
       case None => main
@@ -200,39 +200,37 @@ object Bm25IndexStore {
     * net of the CURRENT tombstone set, with the distinct tombstone
     * count stored alongside as the cache's own validity stamp.
     * [[serveBm25TopK]] accepts the cached row only when the stamp
-    * equals the live tombstone count (a bounded job on the delta-class
-    * tombstone artifact it reads anyway), so a delete or append that
-    * crashed before this refresh can never serve stale constants — the
-    * stale cache fails validation and serving falls back to the exact
-    * doclens recompute. Maintenance-class: one doclens scan per
-    * delete/append, not per query. */
+    * equals the live tombstone count ([[tombstoneCount]]), so a delete
+    * or append that crashed before this refresh can never serve stale
+    * constants — the stale cache fails validation and serving falls back
+    * to the exact doclens recompute. Maintenance-class: one doclens scan
+    * per delete/append, not per query. */
   private def refreshNetStats(spark: SparkSession, path: String): Unit =
     tombstones(spark, path) match {
       case None =>
         graft.util.ArtifactTree.remove(spark, path, "stats_net")
       case Some(t) =>
-        val nTomb = t.distinct().count()
+        val nTomb = tombstoneCount(spark, path)
         readDoclens(spark, path).join(broadcast(t), Seq("doc_id"), "left_anti")
           .agg(count(lit(1)).as("n_docs"), coalesce(sum("dl"), lit(0L)).as("n_tokens"))
           .withColumn("n_tombstones", lit(nTomb))
           .repartition(1).write.mode("overwrite").parquet(s"$path/stats_net")
     }
 
-  // fixed store-format schemas: supplying them skips the per-read
-  // footer-inference job (round 21; see IndexStore's note)
-  private val MetaSchema = new org.apache.spark.sql.types.StructType()
-    .add("model", "string").add("n_buckets", "int")
-  private val StatsSchema = new org.apache.spark.sql.types.StructType()
-    .add("n_docs", "long").add("n_tokens", "long")
+  /** The one-row artifacts (meta, stats, stats_net) are read once per
+    * listing of their tree ([[ArtifactReader.value]]). */
+  def readMeta(spark: SparkSession, path: String): Bm25IndexMeta =
+    ArtifactReader.value(spark, s"$path/meta", "meta") { df =>
+      val rows = df.collect()
+      require(rows.length == 1, s"Bm25IndexStore: expected one meta row at $path, got ${rows.length}")
+      Bm25IndexMeta(rows(0).getAs[String]("model"), rows(0).getAs[Int]("n_buckets"))
+    }
 
-  def readMeta(spark: SparkSession, path: String): Bm25IndexMeta = {
-    val rows = spark.read.schema(MetaSchema).parquet(s"$path/meta").collect()
-    require(rows.length == 1, s"Bm25IndexStore: expected one meta row at $path, got ${rows.length}")
-    Bm25IndexMeta(rows(0).getAs[String]("model"), rows(0).getAs[Int]("n_buckets"))
-  }
+  private def oneRow(spark: SparkSession, dir: String): Row =
+    ArtifactReader.value(spark, dir, "row")(_.head())
 
   def readDoclens(spark: SparkSession, path: String): DataFrame =
-    graft.util.SchemaMemo.parquet(spark,
+    ArtifactReader.parquet(spark,
       graft.util.ArtifactTree.resolve(spark, path, "doclens"), recursive = true)
 
   /** Incremental maintenance: tokenize NEW documents under the
@@ -321,6 +319,12 @@ object Bm25IndexStore {
     graft.util.ArtifactTree.readOptional(spark, path, "tombstones")
       .map(_.select(col("doc_id")))
 
+  /** Distinct tombstoned ids (delete retries may append duplicates): one
+    * collect of the delta-class tombstone set per listing of it. */
+  private def tombstoneCount(spark: SparkSession, path: String): Long =
+    ArtifactReader.value(spark, s"$path/tombstones", "distinct", recursive = true)(
+      _.select(col("doc_id")).collect().distinct.length.toLong)
+
   /** Corpus constants `(N, avgdl)` for serving: the tombstone-free path
     * reads the one-row stats artifact; pending takedowns read the
     * one-row stats_net cache maintained by [[deleteFromBm25Index]],
@@ -332,12 +336,11 @@ object Bm25IndexStore {
   private def corpusConstants(
       spark: SparkSession, path: String, tomb: Option[DataFrame]): (Long, Double) = {
     val statsRow = tomb match {
-      case None =>
-        spark.read.schema(StatsSchema).parquet(s"$path/stats").head()
+      case None => oneRow(spark, s"$path/stats")
       case Some(t) =>
-        val nTomb = t.distinct().count()
-        graft.util.ArtifactTree.readOptional(spark, path, "stats_net")
-          .map(_.head())
+        val nTomb = tombstoneCount(spark, path)
+        Option.when(graft.util.ArtifactTree.exists(spark, path, "stats_net"))(
+            oneRow(spark, s"$path/stats_net"))
           .filter(_.getAs[Long]("n_tombstones") == nTomb)
           .getOrElse(
             readDoclens(spark, path).join(broadcast(t), Seq("doc_id"), "left_anti")

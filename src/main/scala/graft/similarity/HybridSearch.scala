@@ -37,33 +37,27 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType
   */
 object HybridSearch {
 
-  /** Round 22 (guide §2.6 "overlap independent jobs"): the lexical and
-    * semantic legs of the served fusions are INDEPENDENT until the fuse
-    * — but their driver-side construction (the BM25 serve's bounded
-    * collects + checkpoint materialization; the embed + ANN probe
-    * collects) ran sequentially, leaving the cluster idle during each
-    * leg's driver barriers. With the knob on (default), the legs build
-    * on two driver threads so one leg's jobs back-fill the other's
-    * barriers — Spark's scheduler runs concurrent jobs FIFO by design.
-    * Results are unchanged: the legs share only the eagerly
-    * checkpointed query frame and meet again at the deterministic
-    * fusion. `-Dgraft.hybrid.parallelLegs=0` restores serial
-    * construction (diagnostic/A-B arm). */
-  private def parallelLegs: Boolean =
-    !"0".equals(System.getProperty("graft.hybrid.parallelLegs"))
-
-  /** Build `a` and `b` on two threads when [[parallelLegs]]; serially
-    * otherwise. Exceptions from either leg propagate unchanged. */
-  private def joinLegs[A, B](a: => A, b: => B): (A, B) =
-    if (!parallelLegs) (a, b)
-    else {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val fa = Future(a)
-      val rb = b
-      (Await.result(fa, Duration.Inf), rb)
-    }
+  /** Build `a` and `b` on two driver threads (round 22, guide §2.6
+    * "overlap independent jobs"): the lexical and semantic legs of the
+    * fusions are INDEPENDENT until the fuse, so one leg's jobs back-fill
+    * the other's driver barriers — Spark's scheduler runs concurrent jobs
+    * FIFO by design (hybrid close medians 11.5 s → 8.1 s). Results are
+    * unchanged: the legs share only the eagerly checkpointed query frame
+    * and meet again at the deterministic fusion. `a` runs on a pool
+    * thread under a snapshot of the caller's Spark local properties (job
+    * group, description, scheduler pool): a pool thread keeps the
+    * properties it inherited when it was created, which would tag the
+    * leg's jobs with a stale group. Exceptions from either leg propagate
+    * unchanged. */
+  private def joinLegs[A, B](sc: org.apache.spark.SparkContext)(a: => A, b: => B): (A, B) = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val legA = org.apache.spark.sql.graft.Bridge.withCallerProperties(sc)(a)
+    val fa = Future(legA())
+    val rb = b
+    (Await.result(fa, Duration.Inf), rb)
+  }
 
   /** Fuse BM25 over `terms` with cosine against `queryText`'s embedding
     * (both embedded under `modelId`). Returns the top `k` as
@@ -85,7 +79,7 @@ object HybridSearch {
     // independent legs on two driver threads (joinLegs; guide §2.6) —
     // both are TakeOrdered top-poolK collects IN rank order (≤ poolK
     // rows each); the caller's df is read, never mutated
-    val (lexIds, semIds) = joinLegs(
+    val (lexIds, semIds) = joinLegs(spark.sparkContext)(
       Bm25.search(df, textCol, idCol, terms, k = poolK, roundTo = roundTo)
         .orderBy(col("score").desc, col("doc_id").asc)
         .select("doc_id")
@@ -174,7 +168,7 @@ object HybridSearch {
     // the two legs are independent until the fuse — build and collect
     // them on two driver threads (joinLegs; guide §2.6) so each leg's
     // bounded driver barriers overlap the other's cluster work
-    val ((lexIds, idType), semIds) = joinLegs(
+    val ((lexIds, idType), semIds) = joinLegs(spark.sparkContext)(
       {
         val lexServed =
           Bm25IndexStore.serveBm25TopK(spark, bm25Dir, terms, k = poolK,
@@ -217,9 +211,9 @@ object HybridSearch {
     *     query,
     *   - the lexical lists come from ONE
     *     [[Bm25IndexStore.serveBm25TopKBatch]] plan (postings scanned
-    *     twice TOTAL, static bucket pruning — the batched-BM25
-    *     contract), ranked per query by the per-call `(score desc,
-    *     doc_id asc)` tie rule,
+    *     once, static bucket pruning — the batched-BM25 contract),
+    *     ranked per query by the per-call `(score desc, doc_id asc)`
+    *     tie rule,
     *   - the semantic lists come from ONE
     *     [[IndexStore.serveIvfPqTopK]] plan over the embedded query
     *     table (the serve is natively batched: one codes read, dynamic
@@ -281,7 +275,7 @@ object HybridSearch {
     // driver threads (joinLegs; guide §2.6): the BM25 serve's bounded
     // collects and checkpoint materialization overlap the embed + ANN
     // probe collects instead of serializing behind them
-    val (lex, sem) = joinLegs(
+    val (lex, sem) = joinLegs(spark.sparkContext)(
       {
         // lexical ranks: ONE batched BM25 plan, per-query row_number
         // under the per-call tie rule (batch rows are bitwise the

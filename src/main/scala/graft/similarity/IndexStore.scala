@@ -56,42 +56,25 @@ object IndexStore {
   }
 
 
-  // Fixed store-format artifact schemas (round 21, guide §1/§7.3): a
-  // schemaless parquet read runs a footer-inference JOB per call; these
-  // artifacts' schemas are format constants of the store (written by
-  // this object), so serving supplies them and skips that job. Id-typed
-  // artifacts (codes, tombstones) keep inference — their id column type
-  // is the caller's.
-  private val CodebookSchema = new org.apache.spark.sql.types.StructType()
-    .add("m", "int").add("k", "int")
-    .add("centroid", org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.FloatType, containsNull = false))
-  private val CoarseSchema = new org.apache.spark.sql.types.StructType()
-    .add("cell", "int")
-    .add("centroid", org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.FloatType, containsNull = false))
-  private val RotationSchema = new org.apache.spark.sql.types.StructType()
-    .add("i", "int")
-    .add("row", org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.DoubleType, containsNull = false))
-
   /** Load the codebooks artifact back into the `[m][k][dsub]` layout the
-    * encode/LUT expressions take. A bounded driver action by
-    * construction (m×k rows). */
-  def readCodebooks(spark: SparkSession, path: String): Array[Array[Array[Float]]] = {
-    import spark.implicits._
-    val rows = spark.read.schema(CodebookSchema).parquet(s"$path/codebooks")
-      .select(col("m"), col("k"), col("centroid"))
-      .as[(Int, Int, Seq[Float])]
-      .collect()
-    require(rows.nonEmpty, s"IndexStore: empty codebooks at $path")
-    val mMax = rows.map(_._1).max + 1
-    val kMax = rows.map(_._2).max + 1
-    val out = Array.ofDim[Array[Float]](mMax, kMax)
-    rows.foreach { case (mi, ki, c) => out(mi)(ki) = c.toArray }
-    require(out.forall(_.forall(_ != null)), s"IndexStore: sparse codebook grid at $path")
-    out
-  }
+    * encode/LUT expressions take. */
+  def readCodebooks(spark: SparkSession, path: String): Array[Array[Array[Float]]] =
+    readGrid(spark, s"$path/codebooks")
+
+  /** A `(m, k, centroid)` codebook artifact as its `[m][k][dsub]` grid
+    * (m×k rows), read once per listing of it like every tiny artifact
+    * here ([[graft.util.ArtifactReader.value]]); callers share it read-only. */
+  private def readGrid(spark: SparkSession, dir: String): Array[Array[Array[Float]]] =
+    graft.util.ArtifactReader.value(spark, dir, "grid") { df =>
+      import spark.implicits._
+      val rows = df.select(col("m"), col("k"), col("centroid"))
+        .as[(Int, Int, Seq[Float])].collect()
+      require(rows.nonEmpty, s"IndexStore: empty codebooks at $dir")
+      val out = Array.ofDim[Array[Float]](rows.map(_._1).max + 1, rows.map(_._2).max + 1)
+      rows.foreach { case (mi, ki, c) => out(mi)(ki) = c.toArray }
+      require(out.forall(_.forall(_ != null)), s"IndexStore: sparse codebook grid at $dir")
+      out
+    }
 
   /** Incremental index maintenance: encode NEW vectors with the
     * persisted codebooks (read back, never retrained — retraining would
@@ -148,9 +131,7 @@ object IndexStore {
   /** The full code table: the build job's flat files plus every
     * committed streaming delta subdirectory. */
   def readCodes(spark: SparkSession, path: String): DataFrame =
-    // SchemaMemo: neighbor_id's type still comes from the artifact
-    // footers, inferred once per file state (round 22)
-    graft.util.SchemaMemo.parquet(spark,
+    graft.util.ArtifactReader.parquet(spark,
       graft.util.ArtifactTree.resolve(spark, path, "codes"), recursive = true)
 
   /** Tombstone vectors out of the index — the takedown/opt-out job
@@ -315,7 +296,7 @@ object IndexStore {
     // corpus plan (CellsAuto stays under TargetCellRows by construction;
     // this catches the explicit/pre-trained under-celling, the r18
     // batch-512 OOM shape, at the moment the mistake is cheap to fix)
-    val written = spark.read.parquet(
+    val written = graft.util.ArtifactReader.parquet(spark,
       graft.util.ArtifactTree.resolve(spark, path, "ivf_codes")).count()
     val perCell = written / math.max(cents.length, 1)
     if (perCell > MaxRowsPerCellWarn)
@@ -327,18 +308,14 @@ object IndexStore {
           "CellsAuto or grow nCells toward n/" + TargetCellRows)
   }
 
-  /** Load the two tiny IVF artifacts back (bounded driver actions). */
+  /** Load the two tiny IVF artifacts back (see [[readGrid]]). */
   def readIvfArtifacts(
       spark: SparkSession, path: String): (Array[Array[Float]], Array[Array[Array[Float]]]) = {
     import spark.implicits._
-    val cents = spark.read.schema(CoarseSchema).parquet(s"$path/coarse")
-      .as[(Int, Seq[Float])].collect().sortBy(_._1).map(_._2.toArray)
-    val rows = spark.read.schema(CodebookSchema).parquet(s"$path/resid_codebooks")
-      .as[(Int, Int, Seq[Float])].collect()
-    val out = Array.ofDim[Array[Float]](rows.map(_._1).max + 1, rows.map(_._2).max + 1)
-    rows.foreach { case (mi, ki, c) => out(mi)(ki) = c.toArray }
-    require(out.forall(_.forall(_ != null)), s"IndexStore: sparse residual grid at $path")
-    (cents, out)
+    val cents = graft.util.ArtifactReader.value(spark, s"$path/coarse", "cells")(
+      _.select(col("cell"), col("centroid")).as[(Int, Seq[Float])]
+        .collect().sortBy(_._1).map(_._2.toArray))
+    (cents, readGrid(spark, s"$path/resid_codebooks"))
   }
 
   /** Persist the FULL composed stack — OPQ rotation + IVFADC — the
@@ -368,8 +345,9 @@ object IndexStore {
   /** Load the rotation artifact back (dim rows — bounded). */
   def readRotation(spark: SparkSession, path: String): Array[Array[Double]] = {
     import spark.implicits._
-    spark.read.schema(RotationSchema).parquet(s"$path/rotation")
-      .as[(Int, Seq[Double])].collect().sortBy(_._1).map(_._2.toArray)
+    graft.util.ArtifactReader.value(spark, s"$path/rotation", "rows")(
+      _.select(col("i"), col("row")).as[(Int, Seq[Double])]
+        .collect().sortBy(_._1).map(_._2.toArray))
   }
 
   /** Serve the composed index: rotate each query with the PERSISTED
@@ -422,7 +400,7 @@ object IndexStore {
       nProbe: Int = 3): DataFrame = {
     val spark = queries.sparkSession
     val (cents, cbs) = readIvfArtifacts(spark, path)
-    val lists = graft.util.SchemaMemo.parquet(spark,
+    val lists = graft.util.ArtifactReader.parquet(spark,
       graft.util.ArtifactTree.resolve(spark, path, "ivf_codes"))
       .select(col("neighbor_id"), col("cell").cast("int").as("cell"), col("codes"))
     // tombstones ride the excludeIds hook (post-cell-join anti-join),
@@ -441,7 +419,7 @@ object IndexStore {
     * compaction reclaims). One codes scan + a broadcast tombstone tag;
     * the aggregate is nCells rows. */
   def describeIvfIndex(spark: SparkSession, path: String): DataFrame = {
-    val codes = graft.util.SchemaMemo.parquet(spark,
+    val codes = graft.util.ArtifactReader.parquet(spark,
       graft.util.ArtifactTree.resolve(spark, path, "ivf_codes"))
       .select(col("neighbor_id"), col("cell").cast("int").as("cell"))
     val tagged = tombstones(spark, path) match {

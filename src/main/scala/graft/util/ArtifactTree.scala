@@ -150,10 +150,7 @@ object ArtifactTree {
     // recursiveFileLookup flattens streaming-delta subtrees but DISABLES
     // partition-column inference — a partitioned tree must go through
     // normal partition discovery or its partition columns vanish
-    val source =
-      if (partitionCols.isEmpty)
-        spark.read.option("recursiveFileLookup", "true").parquet(live.toString)
-      else spark.read.parquet(live.toString)
+    val source = ArtifactReader.parquet(spark, live.toString, recursive = partitionCols.isEmpty)
     val rewritten = transform(source)
     val newV = curV + 1
     val newTree = versionedTree(hp, subdir, newV)
@@ -184,13 +181,17 @@ object ArtifactTree {
       graceMinAgeMs <= 0L || !fs.exists(aged) ||
         now - fs.getFileStatus(aged).getModificationTime >= graceMinAgeMs
     val gcCeiling = newV - 1 - graceVersions // highest version eligible for GC
+    def drop(tree: Path): Unit = {
+      fs.delete(tree, true)
+      ArtifactReader.forget(spark, tree.toString)
+    }
     for (v <- 1 to math.min(gcCeiling, curV))
       if (oldEnough(marker(hp, subdir, v))) {
-        fs.delete(versionedTree(hp, subdir, v), true)
+        drop(versionedTree(hp, subdir, v))
         fs.delete(marker(hp, subdir, v), false)
       }
     if (gcCeiling >= 0 && fs.exists(plain) && oldEnough(plain))
-      fs.delete(plain, true) // legacy tree ("version 0"), past its grace
+      drop(plain) // legacy tree ("version 0"), past its grace
   }
 
   /** Whether an artifact subtree exists (absent ⇒ callers skip its scan
@@ -208,14 +209,13 @@ object ArtifactTree {
     * and their plan is byte-identical to the pre-delete-feature one. */
   def readOptional(spark: SparkSession, root: String, subdir: String): Option[DataFrame] =
     if (!exists(spark, root, subdir)) None
-    // SchemaMemo: footer inference once per file state (delta-class
-    // subtrees mutate by whole-file append, which the token sees)
-    else Some(SchemaMemo.parquet(spark, s"$root/$subdir", recursive = true))
+    else Some(ArtifactReader.parquet(spark, s"$root/$subdir", recursive = true))
 
   /** Remove an artifact subtree (tombstone clearing after a compaction
     * has folded the drops in). */
   def remove(spark: SparkSession, root: String, subdir: String): Unit = {
     val hp = new Path(root, subdir)
     fsOf(spark, hp).delete(hp, true)
+    ArtifactReader.forget(spark, hp.toString)
   }
 }

@@ -179,6 +179,25 @@ class HybridSearchSpec extends SparkSpec {
     assert(rows(1L) == rows(Long.MaxValue))
   }
 
+  test("every job of a served batch carries the caller's job group") {
+    val (bm25Dir, annDir) = servedFixture()
+    val sc = spark.sparkContext
+    def serveUnder(group: String) = {
+      sc.setJobGroup(group, s"hybrid batch under $group")
+      try org.apache.spark.sql.graft.JobLog.of(sc)(
+        HybridSearch.rrfServedBatch(batchQueries, bm25Dir, annDir, BatchModelId,
+          k = 8, poolK = 5, nProbe = 2).collect())._2
+      finally sc.clearJobGroup()
+    }
+    serveUnder("g1")
+    // the lexical leg runs on a pool thread, which a first call leaves
+    // behind holding that call's properties
+    val jobs = serveUnder("g2")
+    assert(jobs.nonEmpty)
+    val groups = jobs.map(j => Option(j.properties).map(_.getProperty("spark.jobGroup.id")).orNull)
+    assert(groups.forall(_ == "g2"), s"job groups of the second call: $groups")
+  }
+
   test("served batch plan reads each index a constant number of times") {
     import spark.implicits._
     val (bm25Dir, annDir) = servedFixture()
